@@ -434,7 +434,7 @@ def q_dedup_lines(spark, sf_dir):
 
 
 def q_dedup_paragraphs(spark, sf_dir):
-    """RefinedWeb-style PARAGRAPH dedup: same combiner plan as dedup_lines
+    """RefinedWeb-style PARAGRAPH dedup: same window plan as dedup_lines
     at a coarser span. The corpus has no paragraph breaks, so the query
     derives them deterministically (a break after every 5th word —
     identical regex on both engines: explicit [^ ] class, no \\s
@@ -721,10 +721,11 @@ def _run_stream_to_memory(spark, stream_df, prefix: str, *,
     the scaffold every streaming twin repeats — checkpoint handling / trigger
     / sink-naming fixes land here once.
 
-    ``sink="parquet"`` (append mode only — guide §5 "the driver should do
-    almost no data work"): write a DISTRIBUTED parquet sink and read it
-    back. The memory sink funnels every output row through a single-threaded
-    driver collect, which at ~1M finalized sessions was most of the query
+    ``sink="parquet"`` (append mode only, ValueError otherwise — guide §5
+    "the driver should do almost no data work"): write a DISTRIBUTED
+    parquet sink and read it back. The memory sink funnels every output
+    row through a single-threaded driver collect, which at ~1M finalized
+    sessions was most of the query
     (sessions_stream 12.2 s → 2.8 s measured at sf1.0). For small outputs
     (hourly rollups, the scrub twin) the memory sink stays cheaper than the
     file-sink commit + re-read, so callers opt in per expected volume."""
@@ -733,8 +734,12 @@ def _run_stream_to_memory(spark, stream_df, prefix: str, *,
     import tempfile
     import uuid
 
+    if sink == "parquet" and output_mode != "append":
+        raise ValueError(
+            f"sink='parquet' supports output_mode='append' only, got {output_mode!r}"
+        )
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    if sink == "parquet" and output_mode == "append":
+    if sink == "parquet":
         out = tempfile.mkdtemp(prefix=f"szs_stream_{name}_")
         if not _STREAM_OUT_DIRS:
             atexit.register(
@@ -772,19 +777,26 @@ def _events_is_big(sf_dir: str, threshold: int = 8_000_000) -> bool:
     heavy-input shapes (split staging, distributed sink) pay fixed
     task-launch/commit overhead that LOSES at small inputs (measured both
     ways at sf0.1 vs the sf1.0-shaped set), so they switch on input bytes
-    — the streaming analog of AQE's size-adaptive decisions."""
+    — the streaming analog of AQE's size-adaptive decisions. Sums data
+    file sizes through any partition subdirectories, skipping ``_``/``.``
+    entries (Spark's metadata and hidden-file convention); an unreadable
+    input raises OSError rather than reading as small."""
     import os
 
     p = f"{sf_dir}/events.parquet"
     if os.path.isfile(p):
         return os.path.getsize(p) > threshold
-    try:
-        return sum(
-            os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
-            if not f.startswith(("_", "."))
-        ) > threshold
-    except OSError:
-        return False
+
+    def size(d: str) -> int:
+        total = 0
+        with os.scandir(d) as it:
+            for e in it:
+                if e.name.startswith(("_", ".")):
+                    continue
+                total += size(e.path) if e.is_dir() else e.stat().st_size
+        return total
+
+    return size(p) > threshold
 
 
 def _stage_events_split(spark, events: DataFrame, sf_dir: str) -> str:
@@ -1486,13 +1498,11 @@ def q_langid_chunks(spark, sf_dir):
 def q_quality_repetition(spark, sf_dir):
     """Gopher repetition filters (Rae et al. Table A1): duplicate-line
     fraction/char-fraction + most-frequent 2/3/4-gram char fractions.
-    Fused numpy-batch form — ONE Arrow crossing, zero shuffles (the
-    relational form shuffled ~3× the corpus words for a doc-local metric;
-    it survives as the in-engine equivalence twin, and the relational
-    DuckDB oracle stays the independent referee)."""
-    from safe_zone_spark.functions.quality import repetition_metrics_fused
+    Fused numpy-batch form — ONE Arrow crossing, zero shuffles; the
+    relational DuckDB oracle is the independent referee."""
+    from safe_zone_spark.functions.quality import repetition_metrics
 
-    return repetition_metrics_fused(_docs(spark, sf_dir))
+    return repetition_metrics(_docs(spark, sf_dir))
 
 
 def q_tokenize(spark, sf_dir):

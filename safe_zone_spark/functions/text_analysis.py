@@ -67,19 +67,19 @@ def rolling_fingerprint_udf():
 # ---------------------------------------------------------------------------
 # Polynomial k-gram hashing (the Rabin-style rolling-hash family).
 #
-# One hash definition, three engines:   H(gram) = Σ cp_j · B^(k-1-j)  mod M
+# One hash definition, two engines:   H(gram) = Σ cp_j · B^(k-1-j)  mod M
 # over the gram's Unicode CODE POINTS, with B=263 and M=2^31-1.  The numpy
-# batch form (fast path: one sliding-window matmul per Arrow batch), the
-# Catalyst expression form (mod-each-step Horner — identical value since
-# both are the polynomial mod M), and the DuckDB SQL form (explicit
-# power-weighted sum) all produce bit-identical int64 hashes, so winnowing
-# and CDC dedup keep full value-hash oracle rows with a hash that costs a
-# few integer ops per gram instead of an md5 (~100x cheaper — the round-2
-# verdict's one named scale-killer).
+# batch form (Spark's path: one sliding-window matmul per Arrow batch) and
+# the DuckDB SQL form (explicit power-weighted sum) produce bit-identical
+# int64 hashes (pinned with a pure-Python reference in
+# tests/test_validate_operator.py), so winnowing and CDC dedup keep full
+# value-hash oracle rows with a hash that costs a few integer ops per gram
+# instead of an md5 (~100x cheaper — the round-2 verdict's one named
+# scale-killer).
 #
 # Overflow audit: cp <= 0x10FFFF < 2^21, each power < M < 2^31 → every
 # product < 2^52; a k<=16 term sum < 2^56 — comfortably inside int64/BIGINT
-# on all three engines.  All operands are non-negative, so DuckDB's
+# on both engines.  All operands are non-negative, so DuckDB's
 # truncating % equals Python/numpy floor-mod here.
 # ---------------------------------------------------------------------------
 
@@ -169,31 +169,6 @@ def gram_hashes_batch(texts: list[str], k: int) -> list[np.ndarray]:
     return out
 
 
-def poly_gram_hashes_expr(text: Column | str = "text", *, k: int = 8) -> Column:
-    """Catalyst twin of :func:`gram_hashes_batch` (array<long>): per-gram
-    mod-each-step Horner fold — used to cross-check the UDF fast path in
-    tests; the UDF is the production form (the all-array expression form
-    triggers Catalyst re-inlining per reference, like the minhash case)."""
-    t = F.col(text) if isinstance(text, str) else text
-    empty = F.array().cast("array<long>")
-    # NB: sequence(1, 0) yields the DESCENDING [1, 0] — empty cases need an
-    # explicit guard, not greatest(n, 0)
-    n_grams = F.length(t) - (k - 1)
-    return F.when(n_grams < 1, empty).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.aggregate(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, j: F.pmod(
-                    acc * POLY_BASE + F.ascii(t.substr(i + j, F.lit(1))),
-                    F.lit(POLY_MOD),
-                ),
-            ),
-        )
-    )
-
-
 def poly_gram_sum_sql(k: int, *, cps: str = "c", pos: str = "i") -> str:
     """DuckDB expression for H(gram at 1-based char pos ``pos``) given
     ``cps`` = the doc's BIGINT code-point list: power-weighted sum mod M."""
@@ -237,23 +212,6 @@ def winnow_fp_udf(*, k: int = 8, window: int = 4):
         return pd.Series(out, index=texts.index)
 
     return _udf
-
-
-def winnowing_expr(text: Column | str = "text", *, k: int = 8, window: int = 4) -> Column:
-    """Pure-Catalyst twin of :func:`winnow_fp_udf` (array<long> form): gram
-    hashes via :func:`poly_gram_hashes_expr`, sliding minima via slice +
-    array_min. Kept for cross-engine validation tests; the UDF is the
-    production path (one Arrow crossing vs O(n·k) re-inlined substrs)."""
-    grams = poly_gram_hashes_expr(text, k=k)
-    empty = F.array().cast("array<long>")
-    n_windows = F.size(grams) - (window - 1)
-    mins = F.when(n_windows < 1, empty).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda j: F.array_min(F.slice(grams, j, window)),
-        )
-    )
-    return F.array_sort(F.array_distinct(mins))
 
 
 def winnowing_sql(*, k: int = 8, window: int = 4, table: str = "documents",

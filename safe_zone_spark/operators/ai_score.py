@@ -63,11 +63,3 @@ def ai_confidence_join(
     # while the raw doubles are bit-identical on both engines
     fused = (F.col(regex_score_col) + F.col("ai_score")) / 2.0
     return detections.join(F.broadcast(scores), value_col).withColumn("fused", fused)
-
-
-def ai_confidence_sql_fragment(value: str) -> str:
-    """DuckDB twin of the pseudo scorer for a value expression."""
-    return (
-        f"(list_sum(list_transform(regexp_extract_all(md5({value}), '.'), "
-        f"c -> ascii(c))) % 101) / 100.0"
-    )

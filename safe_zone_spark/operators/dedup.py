@@ -37,47 +37,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# Shingling (shared by MinHash and Jaccard) — pure Catalyst expressions.
+# Shingling (shared by MinHash, Jaccard and decontamination).
 # ---------------------------------------------------------------------------
-
-
-def words_expr(text_col: str):
-    """Lowercased whitespace tokens, empties dropped."""
-    return F.filter(F.split(F.lower(F.col(text_col)), "[ \\t\\n\\r\\f\\x0B]+"), lambda w: w != "")
-
-
-def shingles_from_words(w, n: int = 3):
-    """Distinct word n-grams from an ALREADY-MATERIALIZED words array
-    column. Callers must bind :func:`words_expr` to its own projected
-    column first: inlining it here repeats the full split/lower/filter of
-    the text once per ``element_at`` reference inside the transform lambda
-    — interpreted HOF lambdas get no common-subexpression elimination, so
-    the inlined form re-split every document ~3 × gram-count times
-    (measured: the dominant cost of every shingle-consuming operator)."""
-    grams = F.when(F.size(w) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
-        )
-    )
-    return F.array_distinct(grams)
-
-
-def shingles_expr(text_col: str, n: int = 3):
-    """Distinct word n-grams as an array column (JVM-side, no UDF).
-    NB: prefer ``select(words_expr(...).alias("_w"))`` +
-    :func:`shingles_from_words` in hot paths — see that docstring."""
-    return shingles_from_words(words_expr(text_col), n)
 
 
 _WS_RE = None  # compiled lazily in the worker
 
 
 def py_words(text: str) -> list[str]:
-    """Python twin of :func:`words_expr` — same whitespace class, empties
-    dropped, lowercased. Identical to the JVM form for the corpus domain
-    (ASCII — pinned by tests/test_shingle_parity.py, which fuzzes both
-    forms against each other over the real corpus)."""
+    """Lowercased whitespace tokens, empties dropped — the tokenizer every
+    shingle-consuming operator uses. Python form of the DuckDB ``w`` list
+    in :func:`shingles_sql` (same whitespace class, same lowercasing),
+    pinned against it by tests/test_shingle_parity.py over edge cases and
+    the real corpus.
+
+    Domain: the two agree on ASCII and on the non-ASCII cases the parity
+    test pins (ß, ligatures, titlecase digraphs, Greek). They diverge where
+    Python's ``str.lower`` applies context or special casing that DuckDB's
+    ``lower`` does not: ``İ`` lowers to ``i̇`` (two code points) here but to
+    ``i`` in DuckDB, and word-final ``Σ`` lowers to ``ς`` here but to ``σ``
+    in DuckDB. Texts with those characters shingle differently on the two
+    engines."""
     global _WS_RE
     if _WS_RE is None:
         import re
@@ -91,12 +71,8 @@ def shingle_explode_py(
     shingle_n: int = 3, with_size: bool = False,
 ):
     """(id[, n_sh], shingle) — the exploded DISTINCT-shingle relation built
-    in ONE Arrow crossing. Python twin of select(explode(shingles_expr)):
-    same rows (first-occurrence order of distinct grams, matching
-    array_distinct), but with none of the interpreted-HOF evaluation cost —
-    the Catalyst form runs ConcatWs/StringSplit per gram in interpreted
-    mode and needs minutes of C2 warm-up at 10^6-doc scale before its
-    steady state, which a single-shot bench rep never reaches."""
+    in ONE Arrow crossing: the same (id, shingle) rows as unnesting the
+    DuckDB :func:`shingles_sql` list, in first-occurrence order per doc."""
     import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -132,7 +108,8 @@ def shingle_explode_py(
 
 
 def shingles_sql(n: int = 3, text: str = "text") -> str:
-    """DuckDB twin of :func:`shingles_expr` (1-indexed lists)."""
+    """DuckDB twin of :func:`py_words` (``w``) and the distinct grams
+    :func:`shingle_explode_py` emits (1-indexed lists)."""
     w = f"list_filter(string_split_regex(lower({text}), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')"
     gram = " || ' ' || ".join(f"w[i+{k}]" for k in range(n))
     return (
@@ -1303,7 +1280,7 @@ WHERE list_dot_product(a.v, b.v)
 
 def dedup_lines(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
-    min_line_len: int = 20, strategy: str = "window", sep: str = "\n",
+    min_line_len: int = 20, sep: str = "\n",
 ) -> DataFrame:
     """Remove duplicate LINES corpus-wide, keeping each line's first
     occurrence (ordered by (id, line position)); lines shorter than
@@ -1312,52 +1289,24 @@ def dedup_lines(
     "\n" = C4 line dedup, "\n\n" = RefinedWeb-style PARAGRAPH dedup —
     identical plan, coarser spans.
 
-    Two plans, identical results (same oracle hash):
-
-    * ``window`` (default since r6): row_number over (line) — ONE pass over
-      the exploded lines and one line-keyed exchange. The combiner form's
-      map-side partial min only shrinks the KEEPER aggregate; its join
-      probe still ships every occurrence's bytes through the same
-      line-keyed exchange, so the worst-case boilerplate-skew exposure is
-      identical — and the join form consumes the explode from three
-      branches (keeper build, probe, short-line union), re-running the
-      scan/explode three times (no CSE across DataFrame branches). Measured
-      at the sf1.0 set: 2.4-7.2 s combiner vs 1.1-1.9 s window, rows
-      identical.
-    * ``combiner`` — keeper-per-line = ``min(struct(id, idx))`` hash
-      aggregate with map-side partial min + join back; kept as the
-      equivalence twin and for engines where window-over-hot-key planning
-      is worse than a skew-handled join (AQE skew-join applies to joins
-      only).
+    Plan: row_number over (line) — ONE pass over the exploded lines and one
+    line-keyed exchange. A keeper aggregate + join-back ships the same
+    occurrence bytes through the same exchange but consumes the explode
+    from three branches (measured at sf1.0: 2.4-7.2 s vs 1.1-1.9 s here).
     """
     import re as _re
+
+    from pyspark.sql import Window
 
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), _re.escape(sep))).alias("idx", "line"),
     )
-    if strategy == "combiner":
-        long = lines.filter(F.length("line") >= min_line_len)
-        keepers = long.groupBy("line").agg(
-            F.min(F.struct(F.col(id_col).alias("i"), F.col("idx").alias("x"))).alias("k")
-        )
-        long_flagged = long.join(keepers, "line").select(
-            id_col, "idx", "line",
-            ((F.col(id_col) == F.col("k.i")) & (F.col("idx") == F.col("k.x"))
-             ).alias("keep_line"),
-        )
-        short = lines.filter(F.length("line") < min_line_len).withColumn(
-            "keep_line", F.lit(True)
-        )
-        flagged = long_flagged.unionByName(short.select(id_col, "idx", "line", "keep_line"))
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("line").orderBy(F.col(id_col), F.col("idx"))
-        flagged = lines.withColumn("rn", F.row_number().over(w)).withColumn(
-            "keep_line",
-            (F.length("line") < min_line_len) | (F.col("rn") == 1),
-        )
+    w = Window.partitionBy("line").orderBy(F.col(id_col), F.col("idx"))
+    flagged = lines.withColumn("rn", F.row_number().over(w)).withColumn(
+        "keep_line",
+        (F.length("line") < min_line_len) | (F.col("rn") == 1),
+    )
     rebuilt = (
         flagged.groupBy(id_col)
         .agg(
@@ -1460,13 +1409,12 @@ def cdc_dedup(
     Returns (id, text_deduped). Expected chunk length = mod chars; spans
     >= ~2*mod shared across docs dedup with high probability.
 
-    Plan (all shuffles combiner-friendly or tiny):
+    Plan:
     1. chunk — one Arrow crossing per doc batch (:func:`cdc_chunks_udf`);
        posexplode emits (id, idx, chunk) only, so total generated bytes ==
        corpus bytes (never corpus × gram-count);
-    2. keeper per duplicate chunk = min(struct(id, idx)) hash aggregate
-       with map-side partial min (hot boilerplate chunks collapse per map
-       task, the dedup_lines combiner argument);
+    2. keeper per duplicate chunk = min(struct(id, idx)) over a window
+       keyed by the chunk hash (one exchange, see the note below);
     3. rebuild — ordered concat of kept chunks (chunks partition the doc
        exactly, so concat of all-kept == original text).
     """

@@ -126,9 +126,9 @@ def embedding_near_dups(
     1 - (1 - (1-θ/π)^num_planes)^num_tables.
 
     This is the scale path the exact quadratic verifier
-    (dedup.embedding_near_dup_pairs) sits behind: the only shuffles are the
-    (table, bucket) self-join and the pair dedup, so pairwise work is
-    O(Σ bucket²) per table instead of O(n²); size num_planes ≈
+    (dedup.embedding_near_dup_pairs) sits behind: candidates are verified
+    inside each (table, bucket) group and only survivors reach the pair
+    dedup, so pairwise work is O(Σ bucket²) per table instead of O(n²); size num_planes ≈
     log2(n / target_bucket) so buckets stay O(thousands) at any corpus
     size. Regime note: for true near-dups (cos ≥ 0.9) these defaults give
     >95% recall at a tiny candidate rate; at mid thresholds (~0.5) over

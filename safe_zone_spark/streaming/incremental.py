@@ -42,21 +42,46 @@ __all__ = [
     "run_token_for_checkpoint",
 ]
 
+_RUN_TOKEN_FILE = "run_token"
+
 
 def run_token_for_checkpoint(checkpoint_dir: str) -> str:
-    """Stable per-stream token namespacing this run's store appends.
+    """Stable per-stream token namespacing this run's store appends, read
+    from (or, on first start, created as) a uuid file inside the local
+    checkpoint dir.
 
-    Derived from the checkpoint path because that IS the stream's identity:
-    a restart from the same checkpoint continues the same batch-id sequence
-    (replay exclusion must keep applying across the restart), while a NEW
-    crawl streamed over the same store uses a fresh checkpoint — its batch
-    ids restart at 0, and without namespacing its `K >= batch_id` replay
-    exclusion silently excluded ALL of the prior run's appends from dedup
-    and overwrote the prior run's same-named dirs (cross-run dedup loss +
-    store corruption)."""
-    import hashlib
+    The checkpoint IS the stream's identity: a restart from the same
+    checkpoint continues the same batch-id sequence (replay exclusion must
+    keep applying across the restart), while a NEW crawl streamed over the
+    same store starts a fresh checkpoint — its batch ids restart at 0, and
+    without namespacing its `K >= batch_id` replay exclusion silently
+    excluded ALL of the prior run's appends from dedup and overwrote the
+    prior run's same-named dirs (cross-run dedup loss + store corruption).
+    Keying on the checkpoint's CONTENTS rather than its path also covers a
+    checkpoint deleted and recreated at the same path: that is a new
+    stream, so it gets a new token.
 
-    return hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+    Migration: checkpoints created before the token file existed get a
+    fresh token on their next start, so a batch replayed across that
+    restart no longer recognises its own earlier attempt's appends. Drain
+    such a stream (let its last batch commit) before upgrading, or restart
+    it on a fresh checkpoint."""
+    import uuid
+
+    path = os.path.join(checkpoint_dir, _RUN_TOKEN_FILE)
+    if not os.path.exists(path):
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
+            f.write(uuid.uuid4().hex)
+        try:
+            os.link(tmp, path)  # atomic no-clobber publish
+        except FileExistsError:
+            pass  # a concurrent start won; both read its token below
+        finally:
+            os.unlink(tmp)
+    with open(path) as f:
+        return f.read().strip()
 
 
 def compact_signature_store(

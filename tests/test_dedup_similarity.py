@@ -166,30 +166,31 @@ def test_embedding_near_dups_lsh_vs_exact(spark):
         assert len(lsh) / len(exact) >= 0.7
 
 
-def test_dedup_lines_combiner_equals_window(spark):
-    """The combiner-form plan (map-side partial min + join) must reproduce
-    the window-form results byte for byte."""
-    from safe_zone_spark.operators.dedup import dedup_lines
+def test_dedup_lines_window_equals_sql(spark):
+    """The window plan keeps each long line's first occurrence, and its
+    output equals the DuckDB twin's row for row."""
+    import duckdb
+    import pandas as pd
 
-    docs = spark.createDataFrame(
-        [
-            (1, "this line is long enough to dedup\nshort\nunique first line here"),
-            (2, "this line is long enough to dedup\nshort\nanother distinct long line"),
-            (3, "short\nthis line is long enough to dedup\nunique first line here"),
-            (4, ""),
-            (5, "short"),
-        ],
-        "doc_id long, text string",
-    )
-    comb = {r["doc_id"]: r["text_deduped"]
-            for r in dedup_lines(docs, strategy="combiner").collect()}
-    win = {r["doc_id"]: r["text_deduped"]
-           for r in dedup_lines(docs, strategy="window").collect()}
-    assert comb == win
-    assert comb[1].count("this line is long enough to dedup") == 1
-    assert comb[2] == "short\nanother distinct long line"  # dup line removed
+    from safe_zone_spark.operators.dedup import dedup_lines, dedup_lines_sql
+
+    rows = [
+        (1, "this line is long enough to dedup\nshort\nunique first line here"),
+        (2, "this line is long enough to dedup\nshort\nanother distinct long line"),
+        (3, "short\nthis line is long enough to dedup\nunique first line here"),
+        (4, ""),
+        (5, "short"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    win = {r["doc_id"]: r["text_deduped"] for r in dedup_lines(docs).collect()}
+    assert win[1].count("this line is long enough to dedup") == 1
+    assert win[2] == "short\nanother distinct long line"  # dup line removed
     # both long lines first occurred in doc 1 → doc 3 keeps only the short one
-    assert comb[3] == "short"
+    assert win[3] == "short"
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    assert dict(con.execute(dedup_lines_sql()).fetchall()) == win
 
 
 def test_multiprobe_superset_and_recall(spark):

@@ -320,3 +320,41 @@ def test_v1_state_pad_decode():
     _, _, e2_unbroken, _, _ = _advance(buffer_u, validated_u, c2, RULES, 256 * 1024)
     assert e2_resumed == e2_unbroken
     assert "4111 1111 1111 1111" not in (e1 + e2_resumed)  # secret never complete
+
+
+# ---- the driver entry's streaming-twin scaffold -----------------------------
+
+
+def test_parquet_sink_rejects_non_append_mode(spark):
+    """The distributed parquet sink only supports append; asking for it in
+    another mode must fail loudly, not quietly run the memory sink."""
+    import __spark_entry__ as entry
+
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match="append"):
+        entry._run_stream_to_memory(
+            spark, stream.groupBy().count(), "bad", output_mode="complete",
+            sink="parquet",
+        )
+    assert not spark.streams.active  # nothing was started
+
+
+def test_events_is_big_sums_nested_partitions(tmp_path):
+    """A partitioned events.parquet reads its size through the partition
+    subdirectories; Spark's `_`/`.` metadata entries do not count, and an
+    unreadable input raises instead of reading as small."""
+    import __spark_entry__ as entry
+
+    ev = tmp_path / "events.parquet"
+    for day in ("ts_date=2024-01-01", "ts_date=2024-01-02"):
+        os.makedirs(ev / day)
+        (ev / day / "part-0.parquet").write_bytes(b"x" * 600)
+        (ev / day / ".part-0.parquet.crc").write_bytes(b"c" * 5000)
+    (ev / "_SUCCESS").write_bytes(b"m" * 5000)
+    os.makedirs(ev / "_temporary" / "0")
+    (ev / "_temporary" / "0" / "part-9.parquet").write_bytes(b"t" * 5000)
+
+    assert entry._events_is_big(str(tmp_path), threshold=1000)  # 1200 B of data
+    assert not entry._events_is_big(str(tmp_path), threshold=1200)
+    with pytest.raises(OSError):
+        entry._events_is_big(str(tmp_path / "missing"))

@@ -238,3 +238,40 @@ def test_second_run_dedups_against_first_runs_appends(spark, tmp_path, corpora):
     store_files_after = sorted(os.listdir(store))
     assert set(store_files_before) <= set(store_files_after)
     assert len(store_files_after) > len(store_files_before)
+
+
+def test_run_token_follows_checkpoint_contents(spark, tmp_path, corpora):
+    """The run token lives in the checkpoint: a restart from the same
+    checkpoint keeps it, while a checkpoint removed and recreated at the
+    same path is a NEW stream — new token, so the prior run's store appends
+    (its batch ids overlap the new run's) still dedup the new run."""
+    import shutil
+
+    from safe_zone_spark.streaming.incremental import run_token_for_checkpoint
+
+    c1, file_a, file_b = corpora
+    _run(spark, tmp_path, corpora, update_store=True)
+    ckpt = str(tmp_path / "ckpt")
+    token = run_token_for_checkpoint(ckpt)
+    assert run_token_for_checkpoint(ckpt) == token  # restart: same stream
+    store = str(tmp_path / "store")
+    assert any(name.startswith(f"stream-{token}-batch-")
+               for name in os.listdir(store))
+
+    shutil.rmtree(ckpt)
+    src3 = tmp_path / "incoming3"
+    os.makedirs(src3)
+    # 300 = near-dup of a doc that entered the store ONLY via the prior
+    # run's batch-0 append; 301 is fresh
+    pd.DataFrame(
+        [(300, file_a[5][1]), (301, _sentence(random.Random(123)))],
+        columns=["doc_id", "text"],
+    ).to_parquet(src3 / "crawl3.parquet")
+    out3 = str(tmp_path / "kept3")
+    q = stream_incremental_dedup(
+        spark.readStream.schema("doc_id long, text string").parquet(str(src3)),
+        store, out3, ckpt, bands=8, update_store=True,
+    )
+    assert q.awaitTermination(120)
+    assert run_token_for_checkpoint(ckpt) != token
+    assert {r.doc_id for r in spark.read.parquet(out3).collect()} == {301}

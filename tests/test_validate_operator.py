@@ -48,7 +48,9 @@ def test_checksum_candidates(spark, vdf):
 def test_winnowing_shared_substring_guarantee(spark):
     """Any shared substring of length >= k + window - 1 (= 11) must yield
     at least one shared fingerprint; disjoint texts share none."""
-    from safe_zone_spark.functions.text_analysis import winnowing_expr
+    import pyspark.sql.functions as F
+
+    from safe_zone_spark.functions.text_analysis import winnow_fp_udf
 
     shared = "UNIQUESHAREDSEGMENT"  # 19 chars >= 11
     rows = [
@@ -58,8 +60,8 @@ def test_winnowing_shared_substring_guarantee(spark):
         (3, "shrt"),  # shorter than k -> empty fingerprint set
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fp = {r["doc_id"]: set(r["w"]) for r in
-          df.select("doc_id", winnowing_expr("text").alias("w")).collect()}
+    fp = {r["doc_id"]: {int(x) for x in r["w"].split(",") if x} for r in
+          df.select("doc_id", winnow_fp_udf()(F.col("text")).alias("w")).collect()}
     assert fp[0] & fp[1]
     assert not (fp[0] & fp[2])
     assert fp[3] == set()
@@ -95,9 +97,10 @@ def test_schema_validator_twin_edge_cases():
 
 def test_poly_gram_hash_contract(spark):
     """THE hash contract behind winnowing + CDC dedup: the numpy batch fast
-    path, the Catalyst Horner expression, the DuckDB SQL sum form, and a
-    pure-Python reference all produce bit-identical int64 gram hashes —
-    including non-ASCII code points, NULs, empty and sub-k strings."""
+    path, the DuckDB SQL sum form, and a pure-Python reference all produce
+    bit-identical int64 gram hashes — including non-ASCII code points, NULs,
+    empty and sub-k strings — and the winnowing UDF's fingerprints are the
+    sorted distinct sliding-window minima of the reference hashes."""
     import duckdb
     import pyspark.sql.functions as F
 
@@ -106,15 +109,13 @@ def test_poly_gram_hash_contract(spark):
         POLY_MOD,
         codepoints_sql,
         gram_hashes_batch,
-        poly_gram_hashes_expr,
         poly_gram_sum_sql,
         winnow_fp_udf,
-        winnowing_expr,
     )
 
     texts = ["hello world gram test", "", "shrt", "éclair € ünïcode",
              "\x00lead nul kept significant", "a" * 20]
-    k = 8
+    k, window = 8, 4
 
     def ref(t):
         return [
@@ -141,17 +142,17 @@ def test_poly_gram_hash_contract(spark):
     ).fetchall()
     assert [[int(x) for x in g] for _, g in got_sql] == expected
 
+    def ref_winnow(h):
+        mins = {min(h[i:i + window]) for i in range(len(h) - window + 1)}
+        return ",".join(map(str, sorted(mins)))
+
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     rows = df.select(
-        "doc_id",
-        poly_gram_hashes_expr("text", k=k).alias("g"),
-        winnow_fp_udf()(F.col("text")).alias("u"),
-        F.concat_ws(",", winnowing_expr("text")).alias("e"),
+        "doc_id", winnow_fp_udf(k=k, window=window)(F.col("text")).alias("u")
     ).collect()
+    assert len(rows) == len(texts)
     for r in rows:
-        assert list(r["g"]) == expected[r["doc_id"]]
-        # the one-crossing UDF fast path == the pure-Catalyst winnowing twin
-        assert r["u"] == r["e"]
+        assert r["u"] == ref_winnow(expected[r["doc_id"]])
 
 
 def test_cdc_chunks_partition_exactly(spark):
