@@ -54,8 +54,6 @@ from safe_zone_spark.operators.dedup import (
     decontaminate_sql,
     dedup_lines,
     dedup_lines_sql,
-    embedding_near_dup_pairs,
-    embedding_near_dup_sql,
     fuzzy_dedup_docs,
     fuzzy_dedup_docs_sql,
     incremental_minhash_dedup,
@@ -473,10 +471,10 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 def q_dedup_fuzzy_docs(spark, sf_dir):
     """Fuzzy-dedup cluster resolution: MinHash+LSH pairs (est_jaccard >=
-    0.5) → connected components (min-label propagation to fixpoint) → one
-    keeper per cluster. The actionable keep/drop surface the pair queries
-    feed; transitivity (A~B, B~C ⇒ one keeper for {A,B,C}) is pinned in
-    tests/test_dedup_clusters.py."""
+    0.5) → connected components (driver union-find on small pair graphs,
+    large-star/small-star above 200k edges) → one keeper per cluster. The
+    actionable keep/drop surface the pair queries feed; transitivity (A~B,
+    B~C ⇒ one keeper for {A,B,C}) is pinned in tests/test_dedup_clusters.py."""
     return fuzzy_dedup_docs(_docs(spark, sf_dir), threshold=0.5)
 
 

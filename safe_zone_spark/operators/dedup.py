@@ -467,236 +467,152 @@ WHERE NOT ({prior_pred}) AND {id_col} NOT IN (SELECT {id_col} FROM dups)
 # ---------------------------------------------------------------------------
 
 
+def _edge_sig(rel: DataFrame) -> tuple:
+    """(count, xxhash64-sum) of an (u, v) edge set in one action. The sum is
+    decimal(38,0): xxhash64 spans the full int64 range and a BIGINT sum
+    overflows under ANSI mode on a handful of rows."""
+    row = rel.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+    ).collect()[0]
+    return (row[0], row[1])
+
+
 def connected_components(
     edges: DataFrame, *, src: str = "id_a", dst: str = "id_b",
-    max_iter: int = 25, driver_threshold: int = 200_000,
+    max_iter: int = 50, driver_threshold: int = 200_000,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Deterministic connected components over an undirected pair graph:
-    repeated min-label propagation to a fixpoint (each node's label
-    converges to the MINIMUM id in its component).
+    """Deterministic connected components over an undirected pair graph.
+    Returns (u, label) with exactly one row per node named in ``edges``
+    (a self-pair (n, n) included); label = the minimum id in u's component.
 
-    Scale shape: every iteration is ONE shuffle keyed by node id (a
-    groupBy-min over the adjacency join) and runs on the PAIR GRAPH only —
-    a small fraction of the corpus (docs with no near-dup candidate never
-    enter). Rounds needed = component diameter; near-dup clusters are
-    shallow (a dup family pairs densely), so 2-4 rounds in practice.
-    Convergence detection is EXACT: each round carries a ``changed`` flag
-    (neighbor min beat the current label) through the checkpoint and sums
-    it in one action on the just-materialized partitions — zero changed
-    rows is the fixpoint. No extra join, no signature-collision surface.
-    ``localCheckpoint`` truncates the iterative lineage
-    (an unbounded plan tree is the classic iterative-Spark failure).
-    Giant components (boilerplate chains) make min(label) a hot key —
-    see SCALE.md for the large-star/small-star escalation.
+    Small pair graphs resolve on the driver: when the symmetric edge count
+    (2 × the deduped undirected edges) is at most ``driver_threshold``, the
+    edges are collected into a union-find. The collect is BOUNDED by the
+    threshold (a few MB), and an iterative Spark loop would pay ~1 s of
+    scheduling per round for microseconds of work (a 256-edge sf0.1 graph
+    spent 4.5 s there). ``driver_threshold=0`` forces the distributed path.
 
-    Small-graph fast path: when the (measured) symmetric edge count is at
-    most ``driver_threshold``, the edges are collected and resolved with a
-    driver-side union-find — the iterative loop pays ~1 s of scheduling
-    per round, a 256-edge sf0.1 graph was spending 4.5 s on what is
-    microseconds of actual work. The collect is BOUNDED by the threshold
-    (≈ a few MB), the distributed loop stays the 100 TB path, and both
-    paths are label-identical (pinned in tests). ``driver_threshold=0``
-    forces the distributed loop.
+    Above the threshold: alternating large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"). Each round REWRITES the
+    edge set so every node points closer to its component minimum:
+    * large-star(u): every neighbor v > u is re-pointed at
+      m(u) = min(N(u) ∪ {u});
+    * small-star(u): u and its neighbors < u are re-pointed at the minimum
+      of that closed neighborhood.
+    Both preserve connectivity and only link toward smaller ids, so the
+    fixpoint is one star per component centered at its minimum, reached in
+    O(log d) rounds for a component of depth d (12 at a 16,000-doc chain,
+    scripts/giant_component_bench.py), where min-label propagation needs d
+    rounds and funnels a giant component's frontier through one hot key
+    each round; here per-key fan-in is bounded by current neighborhoods. Each
+    round is three shuffles keyed by node id (two window mins, one
+    distinct). On a pure-shallow graph (4,000 ten-node cliques, 360k
+    symmetric edges, 4 cores) it needs min-label's 2 rounds and matched its
+    best warm time (2.4 s).
+
+    Convergence: the (count, xxhash64-sum) signature of the edge set is
+    stable exactly at the fixpoint. ``localCheckpoint`` per round keeps the
+    plan tree flat (an unbounded lineage is the classic iterative-Spark
+    failure). Labels are read off the fixpoint edges: (member → center)
+    plus (center → center).
     """
-    # ONE pass over the (possibly expensive) edge lineage: a two-branch
-    # union would recompute the upstream minhash per direction (measured:
-    # the whole LSH chain ran twice, doubling the query)
-    adj = (
+    # ONE pass over the (possibly expensive) edge lineage, each undirected
+    # edge once as (low, high)
+    e = (
         edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("_e")
+            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
         )
-        .select("_e.u", "_e.v")
         .distinct()
         .localCheckpoint()
     )
-    n_edges = adj.count()
+    prev = _edge_sig(e)  # (count, hash-sum): sizes the graph, seeds the loop
+    n_sym = 2 * prev[0]
     if stats is not None:  # observability for benches/tests, not control flow
-        stats["sym_edges"] = n_edges
-    if n_edges <= driver_threshold:
+        stats["sym_edges"] = n_sym
+    if n_sym <= driver_threshold:
         if stats is not None:
             stats["path"] = "driver-union-find"
             stats["rounds"] = 0
-        parent: dict[int, int] = {}
+        parent: dict = {}
 
-        def find(x: int) -> int:
+        def find(x):
             r = x
-            while parent.get(r, r) != r:
+            while parent[r] != r:
                 r = parent[r]
-            while parent.get(x, x) != x:  # path compression
+            while parent[x] != r:  # path compression
                 parent[x], x = r, parent[x]
             return r
 
-        for row in adj.collect():
-            ra, rb = find(row[0]), find(row[1])
-            if ra != rb:  # union by min root → root IS the component min
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        data = [(n, find(n)) for n in parent] or []
-        nodes = adj.select("u").distinct()
-        if not data:
-            return nodes.withColumn("label", F.col("u"))
+        for u, v in e.collect():
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:  # union by min root → root IS the component min
+                parent[max(ru, rv)] = min(ru, rv)
         # schema derived from the edge column type — ids may be strings
         from pyspark.sql.types import StructField, StructType
 
-        utype = adj.schema["u"].dataType
-        lab = adj.sparkSession.createDataFrame(
-            data,
-            StructType(
-                [StructField("u", utype), StructField("label", utype)]
-            ),
+        utype = e.schema["u"].dataType
+        return e.sparkSession.createDataFrame(
+            [(n, find(n)) for n in parent],
+            StructType([StructField("u", utype), StructField("label", utype)]),
         )
-        # nodes that were only ever their own root still need a row
-        return (
-            nodes.join(lab, "u", "left")
-            .select("u", F.coalesce("label", F.col("u")).alias("label"))
-        )
-    labels = adj.select("u").distinct().withColumn("label", F.col("u"))
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        nbr = (
-            adj.join(labels, "u")
-            .groupBy(F.col("v").alias("u"))
-            .agg(F.min("label").alias("nl"))
-        )
-        # labels only decrease, so "no row improved" IS the fixpoint; the
-        # changed flag rides the checkpoint so the agg below costs one
-        # action on already-materialized partitions, not a recompute
-        stepped = (
-            labels.join(nbr, "u", "left")
-            .select(
-                "u",
-                F.least("label", F.coalesce("nl", "label")).alias("label"),
-                (F.col("nl") < F.col("label")).cast("int").alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        labels = stepped.select("u", "label")
-        n_changed = stepped.agg(F.sum("changed")).collect()[0][0] or 0
-        if n_changed == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["path"] = "minlabel"
-        stats["rounds"] = rounds
-    if not converged:
-        # Silent non-convergence would ship corrupt keep/drop decisions
-        # (split clusters, multiple keepers) AND diverge from the oracle's
-        # full recursive closure — fail loudly instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star — via fuzzy_dedup_docs("
-            "algorithm='star') — for O(log d) rounds"
-        )
-    return labels
 
+    from pyspark.sql import Window as W
 
-def connected_components_star(
-    edges: DataFrame, *, src: str = "id_a", dst: str = "id_b",
-    max_iter: int = 50, stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the giant-
-    component escalation documented in SCALE.md, implemented and proven
-    equivalent to :func:`connected_components` (tests/test_dedup_clusters).
-
-    Why it exists: min-label propagation needs O(diameter) rounds and
-    funnels a giant component's whole frontier through its min label every
-    round. The star operations instead REWRITE the edge set — each round
-    every node points closer to its component minimum — converging in
-    O(log d) alternations with per-round fan-in bounded by current
-    neighborhoods, not final component size.
-
-    Per round (all keyed shuffles on node id, same key class as the
-    min-label loop):
-    * large-star(u): for every neighbor v > u, re-point v at
-      m(u) = min(N(u) ∪ {u});
-    * small-star(u): re-point u and its neighbors <= u at the minimum of
-      that closed neighborhood.
-    Both preserve connectivity and only ever link toward smaller ids, so
-    the fixpoint is the star graph centered at each component's minimum.
-    Convergence detection: the (count, xxhash64-sum) signature of the edge
-    set is stable exactly at the fixpoint.
-
-    Returns (u, label) for every node that appears in ``edges`` — same
-    contract as :func:`connected_components`.
-    """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("u").alias("n"))
-        .union(e.select(F.col("v").alias("n")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _sig(rel: DataFrame) -> tuple:
-        # decimal(38,0) sum: xxhash64 spans the full int64 range and a
-        # BIGINT sum overflows under ANSI mode on a handful of rows
-        row = rel.agg(
-            F.count(F.lit(1)),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-        ).collect()[0]
-        return (row[0], row[1])
+    by_u = W.partitionBy("u")
 
     def _large_star(rel: DataFrame) -> DataFrame:
-        sym = rel.union(rel.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(
-            F.least(F.first("u"), F.min("v")).alias("m")
-        )
+        # both directions from ONE read: a two-branch union would compute
+        # an uncheckpointed input twice
+        sym = rel.select(
+            F.explode(
+                F.array(
+                    F.struct("u", "v"),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+                )
+            ).alias("_e")
+        ).select("_e.u", "_e.v")
+        # m = min(N(u) ∪ {u}) <= u < v, so (m, v) is already (low, high);
+        # duplicates are left for small-star's distinct
         return (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-            .distinct()
+            sym.withColumn("m", F.least("u", F.min("v").over(by_u)))
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("m").alias("u"), "v")
         )
 
     def _small_star(rel: DataFrame) -> DataFrame:
-        sym = rel.union(rel.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        low = sym.filter(F.col("v") <= F.col("u"))
-        m = low.groupBy("u").agg(
-            F.least(F.first("u"), F.min("v")).alias("m")
-        )
-        re_pointed = low.join(m, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-        self_edge = m.select(F.col("u"), F.col("m").alias("v"))
+        # rel rows are (low, high), so swapping them lists every node's
+        # lower neighbors; m <= v < u
+        low = rel.select(
+            F.col("v").alias("u"), F.col("u").alias("v")
+        ).withColumn("m", F.min("v").over(by_u))
         return (
-            re_pointed.union(self_edge)
+            low.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("m").alias("u"), F.col("v")),
+                        F.struct(F.col("m").alias("u"), F.col("u").alias("v")),
+                    )
+                ).alias("_e")
+            )
+            .select("_e.u", "_e.v")
             .filter(F.col("u") != F.col("v"))
-            .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
             .distinct()
         )
 
-    prev = _sig(e)
-    if stats is not None:
-        # 2x the deduped undirected count = the symmetric-row metric the
-        # min-label loop records, so the two algorithms are comparable
-        stats["sym_edges"] = 2 * prev[0]
+    # self-pairs stay out of the loop; `prev` counted them, so with any
+    # present the first comparison misses: one extra round, same labels
+    loops = e.filter(F.col("u") == F.col("v"))
+    e = e.filter(F.col("u") != F.col("v"))
     converged = False
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
         e = _small_star(_large_star(e)).localCheckpoint()
-        cur = _sig(e)
+        cur = _edge_sig(e)
         if cur == prev:
             converged = True
             break
@@ -705,27 +621,36 @@ def connected_components_star(
         stats["path"] = "star"
         stats["rounds"] = rounds
     if not converged:
+        # Silent non-convergence would ship corrupt keep/drop decisions
+        # (split clusters, multiple keepers) AND diverge from the oracle's
+        # full recursive closure — fail loudly instead.
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "alternations — raise max_iter (rounds needed ~ log2 of the "
-            "deepest component)"
+            f"connected_components did not converge in {max_iter} rounds — "
+            "raise max_iter (rounds needed ~ log2 of the deepest component)"
         )
-    # fixpoint edges are (center=u, member=v) stars with u = component min
-    member_labels = e.select(F.col("v").alias("u"), F.col("u").alias("label"))
+    # fixpoint rows are (center, member): member → center, center → center.
+    # Self-pairs ride along so a node named only by (n, n) keeps its row;
+    # min picks the center for a node that is both.
     return (
-        nodes.join(member_labels, nodes.n == member_labels.u, "left")
+        e.unionByName(loops)
         .select(
-            F.col("n").alias("u"),
-            F.coalesce("label", F.col("n")).alias("label"),
+            F.explode(
+                F.array(
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("label")),
+                    F.struct("u", F.col("u").alias("label")),
+                )
+            ).alias("_l")
         )
+        .groupBy(F.col("_l.u").alias("u"))
+        .agg(F.min("_l.label").alias("label"))
     )
 
 
 def fuzzy_dedup_docs(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     threshold: float = 0.5, num_hashes: int = 16, bands: int = 4,
-    shingle_n: int = 3, max_iter: int = 25, algorithm: str = "minlabel",
-    pre_contract_exact: bool = False, driver_threshold: int = 200_000,
+    shingle_n: int = 3, pre_contract_exact: bool = False,
+    driver_threshold: int = 200_000,
     cc_stats: dict | None = None,
 ) -> DataFrame:
     """End-to-end fuzzy dedup decision: MinHash+LSH candidate pairs
@@ -737,11 +662,6 @@ def fuzzy_dedup_docs(
     construction: A~B and B~C place all three in one cluster with a single
     keeper even if A and C never paired directly.
 
-    ``algorithm``: 'minlabel' (default — O(diameter) rounds, right for the
-    shallow components near-dup corpora produce) or 'star' (large-star/
-    small-star, O(log d) rounds with bounded fan-in — the giant-component
-    escalation; identical labels, proven in tests).
-
     ``pre_contract_exact``: run exact dedup FIRST and let only one
     representative per identical text (its min id) enter the pair graph —
     SCALE.md mitigation #1: boilerplate replicated verbatim across a site
@@ -750,22 +670,12 @@ def fuzzy_dedup_docs(
     (identical texts pair at est_jaccard 1.0 anyway); texts too short to
     shingle additionally get clustered WITH their exact copies (a strict
     improvement — the uncontracted path can't pair what it can't sign).
+
+    ``driver_threshold`` and ``cc_stats`` forward to
+    :func:`connected_components` (0 forces the distributed path — used by
+    the giant-component bench; the dict receives {path, rounds, sym_edges},
+    so rounds-vs-depth is measurable without extra plumbing).
     """
-    # ``driver_threshold`` forwards to the min-label loop (0 forces the
-    # distributed path — used by the giant-component bench); ``cc_stats``
-    # (optional dict) receives {path, rounds, sym_edges} from whichever CC
-    # ran, so rounds-vs-diameter is measurable without extra plumbing.
-    if algorithm == "star":
-        def cc(pairs_df, *, max_iter):
-            return connected_components_star(
-                pairs_df, max_iter=max_iter, stats=cc_stats
-            )
-    else:
-        def cc(pairs_df, *, max_iter):
-            return connected_components(
-                pairs_df, max_iter=max_iter,
-                driver_threshold=driver_threshold, stats=cc_stats,
-            )
     if pre_contract_exact:
         # NULL text is NOT an exact-dup family: md5(NULL) is NULL and
         # groupBy groups NULL keys, which would silently discard unrelated
@@ -784,7 +694,9 @@ def fuzzy_dedup_docs(
             rep_docs, id_col=id_col, text_col=text_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
         ).filter(F.col("est_jaccard") >= threshold)
-        comp = cc(pairs, max_iter=max_iter)
+        comp = connected_components(
+            pairs, driver_threshold=driver_threshold, stats=cc_stats
+        )
         # rep's component min IS the global min doc id of the expanded
         # cluster: every family member's id >= its rep (= family min)
         labeled = (
@@ -798,7 +710,9 @@ def fuzzy_dedup_docs(
             df, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
             bands=bands, shingle_n=shingle_n,
         ).filter(F.col("est_jaccard") >= threshold)
-        comp = cc(pairs, max_iter=max_iter)
+        comp = connected_components(
+            pairs, driver_threshold=driver_threshold, stats=cc_stats
+        )
         labeled = (
             df.select(id_col)
             .join(comp, F.col(id_col) == F.col("u"), "left")
@@ -1258,19 +1172,6 @@ def embedding_near_dup_pairs(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-
-
-def embedding_near_dup_sql(*, table: str = "embeddings", id_col: str = "vec_id",
-                           threshold: float = 0.4) -> str:
-    return f"""
-WITH e AS (SELECT {id_col}, CAST(embedding AS DOUBLE[]) AS v FROM {table})
-SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-  round(list_dot_product(a.v, b.v)
-        / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-FROM e a JOIN e b ON a.{id_col} < b.{id_col}
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= {threshold}
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -1,30 +1,30 @@
 """Adversarial giant-component proof (VERDICT r4 #4).
 
-The sf1 replica corpus's near-dup families have diameter 1, so the star
-escalation and exact pre-contraction never earn their keep there. This
-bench builds the adversarial shape they exist for — a CHAINED-OVERLAP
+The sf1 replica corpus's near-dup families have diameter 1, so the
+distributed CC path and exact pre-contraction never earn their keep there.
+This bench builds the adversarial shape they exist for — a CHAINED-OVERLAP
 corpus: doc i's token window overlaps doc i+1's enough to pair
 (est_jaccard ≈ 0.6 > threshold 0.5) while doc i+2 is already below
 threshold, so the pair graph is one path of length L — diameter L-1, the
-worst case for min-label propagation (site-wide boilerplate chains produce
+worst case for propagation-style CC (site-wide boilerplate chains produce
 exactly this at crawl scale).
 
 Measured claims this script produces (→ BENCH/giant_component.json + a
 marker-spliced section in BENCH/BASELINE.md):
 
-1. min-label rounds grow LINEARLY with chain length (rounds ≈ diameter) —
-   run at small L only; the fit makes the large-L cost obvious.
-2. star rounds grow ~LOGARITHMICALLY (Kiveris et al. large-star/small-star)
-   — run up to a 16k-doc chain, where min-label would need ~16k shuffles.
-3. Labels agree between the two algorithms wherever both run.
-4. pre_contract_exact on a 10x verbatim-replica corpus shrinks the pair
+1. The distributed path's rounds (Kiveris et al. large-star/small-star)
+   grow ~LOGARITHMICALLY with chain length — run up to a 16k-doc chain.
+   Every run forces that path with driver_threshold=0.
+2. Labels agree between the driver union-find and the distributed path at
+   chain_64.
+3. pre_contract_exact on a 10x verbatim-replica corpus shrinks the pair
    graph ~replica² fold (only one representative per family enters LSH).
 
 The chain is synthesized deterministically: doc i = tokens [i*S, i*S + W)
 of the infinite stream w0 w1 w2 ... with W=100, S=3 — word-level Jaccard
 j(k steps) = (100-3k)/(100+3k), so docs link to their ~10 nearest
 neighbors (j(10) ≈ 0.53) and nothing further: the pair graph is a banded
-path with diameter ≈ L/10 — still Θ(L), min-label's worst case.
+path with diameter ≈ L/10 — still Θ(L).
 
 LSH parameters matter for chain INTEGRITY: fuzzy_dedup_docs is run with
 num_hashes=32, bands=16 (2-row bands) instead of the 16/4 default. With
@@ -117,13 +117,13 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(df, algorithm, *, max_iter, label=""):
+    def run(df, *, label, driver_threshold=0, pre_contract_exact=False):
         stats: dict = {}
         t0 = time.time()
         out = fuzzy_dedup_docs(
-            df, algorithm=algorithm, max_iter=max_iter,
+            df, pre_contract_exact=pre_contract_exact,
             num_hashes=32, bands=16,  # 2-row bands: chain-integrity, see module doc
-            driver_threshold=0, cc_stats=stats,  # force the distributed loop
+            driver_threshold=driver_threshold, cc_stats=stats,
         ).localCheckpoint()  # one compute; label comparisons reuse it
         agg = out.agg(
             F.max("cluster_size").alias("giant"),
@@ -131,7 +131,7 @@ def main() -> int:
         ).collect()[0]
         wall = time.time() - t0
         row = {
-            "algorithm": algorithm, "label": label,
+            "path": stats.get("path"), "label": label,
             "wall_sec": round(wall, 2), "rounds": stats.get("rounds"),
             "sym_edges": stats.get("sym_edges"),
             "giant_component": int(agg["giant"]),
@@ -142,26 +142,18 @@ def main() -> int:
 
     results = {"total_docs": total_docs, "window": W, "stride": S, "runs": []}
 
-    # --- rounds vs diameter: min-label at small L, star up to 16k ---------
-    minlabel_L = (64, 128, 256)
-    star_L = (64, 256, 1024, 4096, 16000)
-    for L in sorted(set(minlabel_L) | set(star_L)):
+    # --- rounds vs chain length on the distributed path, up to 16k ---------
+    for L in (64, 256, 1024, 4096, 16000):
         if L > total_docs:  # smoke runs: skip chains longer than the corpus
             continue
         df = build_chain_corpus(spark, L, total_docs).localCheckpoint()
-        labels = {}
-        if L in star_L:
-            row, out = run(df, "star", max_iter=60, label=f"chain_{L}")
-            results["runs"].append(row)
-            labels["star"] = out
-        if L in minlabel_L:
-            row, out = run(df, "minlabel", max_iter=L + 10, label=f"chain_{L}")
-            results["runs"].append(row)
-            labels["minlabel"] = out
-        if len(labels) == 2:  # label-identical where both ran
+        row, out = run(df, label=f"chain_{L}")
+        results["runs"].append(row)
+        if L == 64:  # the driver union-find must give the same labels
+            _, ref = run(df, label=f"chain_{L}", driver_threshold=10**9)
             diff = (
-                labels["star"].select("doc_id", "cluster_id")
-                .exceptAll(labels["minlabel"].select("doc_id", "cluster_id"))
+                out.select("doc_id", "cluster_id")
+                .exceptAll(ref.select("doc_id", "cluster_id"))
                 .count()
             )
             assert diff == 0, f"label mismatch at L={L}: {diff} rows"
@@ -170,23 +162,13 @@ def main() -> int:
     # --- pre-contraction on verbatim replicas ------------------------------
     rep_df = build_replica_corpus(spark, families=total_docs // 100,
                                   replicas=10).localCheckpoint()
-    row_plain, _ = run(rep_df, "star", max_iter=60, label="replicas_plain")
-    stats: dict = {}
-    t0 = time.time()
-    out = fuzzy_dedup_docs(
-        rep_df, algorithm="star", max_iter=60, pre_contract_exact=True,
-        num_hashes=32, bands=16,
-        driver_threshold=0, cc_stats=stats,
+    row_plain, _ = run(rep_df, label="replicas_plain")
+    row_pc, out = run(rep_df, label="replicas_pre_contract",
+                      pre_contract_exact=True)
+    row_pc["full_families_resolved"] = (
+        out.filter(F.col("cluster_size") == 10)
+        .select("cluster_id").distinct().count()
     )
-    n = out.filter(F.col("cluster_size") == 10).count()
-    row_pc = {
-        "algorithm": "star", "label": "replicas_pre_contract",
-        "wall_sec": round(time.time() - t0, 2),
-        "rounds": stats.get("rounds"),
-        "sym_edges": stats.get("sym_edges", 0),
-        "full_families_resolved": int(n),
-    }
-    print(json.dumps(row_pc))
     results["runs"].append(row_plain)
     results["runs"].append(row_pc)
 
@@ -201,31 +183,30 @@ def main() -> int:
         "",
         "Chain corpus: doc i = tokens [i*3, i*3+100) — docs pair with their",
         "~10 nearest neighbors only (j(10) ~ 0.53), so the pair graph is a",
-        "banded PATH with diameter ~ L/10: min-label's worst case. Run with",
-        "num_hashes=32/bands=16 (2-row bands) so correlated signature flips",
-        "at window boundaries cannot cut the chain (see module docstring);",
-        "giant == L in every row verifies one component end-to-end. Wall",
-        "includes the full LSH chain over all 50k docs each run; the first",
-        "row additionally carries Spark session warm-up. min-label rounds",
-        "track the diameter LINEARLY (8/14/26 at L=64/128/256 ~ L/10); star",
-        "rounds track log2(L) (+2 per 4x L) — at L=16000 star needs 12",
-        "rounds where min-label would need ~1,600.",
+        "banded PATH with diameter ~ L/10. Run with num_hashes=32/bands=16",
+        "(2-row bands) so correlated signature flips at window boundaries",
+        "cannot cut the chain (see module docstring); giant == L in every",
+        "row verifies one component end-to-end. Every row forces the",
+        "distributed large-star/small-star path (driver_threshold=0); its",
+        "rounds track log2(L), and the driver union-find gives the same",
+        "labels at L=64. Wall includes the full LSH chain over all docs",
+        "each run; the first row additionally carries Spark session warm-up.",
         "",
-        "| chain L | algorithm | rounds | log2(L) | wall (s) | giant |",
+        "| chain L | path | rounds | log2(L) | wall (s) | giant |",
         "|---|---|---|---|---|---|",
     ]
     for r in results["runs"]:
         if "rounds" in r and r.get("label", "").startswith("chain_"):
             L = int(r["label"].split("_")[1])
             lines.append(
-                f"| {L} | {r['algorithm']} | {r['rounds']} | "
+                f"| {L} | {r['path']} | {r['rounds']} | "
                 f"{math.log2(L):.1f} | {r['wall_sec']} | "
                 f"{r['giant_component']} |"
             )
     lines += [
         "",
         f"Pre-contraction (10x verbatim replicas, {total_docs // 100} "
-        "families): plain star edge count "
+        "families): plain edge count "
         f"{row_plain['sym_edges']} vs {row_pc['sym_edges']} after exact "
         "pre-contraction "
         f"({row_plain['wall_sec']}s vs {row_pc['wall_sec']}s; "

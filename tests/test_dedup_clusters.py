@@ -10,14 +10,14 @@ from safe_zone_spark.operators.dedup import connected_components, fuzzy_dedup_do
 
 def _cc(spark, edges):
     """Run BOTH the driver union-find fast path (default threshold) and the
-    distributed min-label loop (driver_threshold=0), assert they agree,
-    return the label map."""
+    distributed large-star/small-star loop (driver_threshold=0), assert they
+    agree with exactly one row per node, return the label map."""
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = {r["u"]: r["label"] for r in connected_components(df).collect()}
-    dist = {
-        r["u"]: r["label"]
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
+    fast_rows = connected_components(df).collect()
+    dist_rows = connected_components(df, driver_threshold=0).collect()
+    fast = {r["u"]: r["label"] for r in fast_rows}
+    dist = {r["u"]: r["label"] for r in dist_rows}
+    assert len(fast_rows) == len(fast) and len(dist_rows) == len(dist)
     assert fast == dist
     return fast
 
@@ -26,6 +26,12 @@ def test_connected_components_basic(spark):
     # two components: {1,2,3} (chain) and {7,9}
     labels = _cc(spark, [(1, 2), (2, 3), (7, 9)])
     assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
+    # a node named only by a self-pair is its own component; a self-pair on
+    # a node with real edges changes nothing
+    assert _cc(spark, [(1, 1), (2, 3)]) == {1: 1, 2: 2, 3: 2}
+    assert _cc(spark, [(1, 2), (2, 2), (2, 3), (5, 5)]) == {
+        1: 1, 2: 1, 3: 1, 5: 5
+    }
 
 
 def test_connected_components_long_chain(spark):
@@ -89,13 +95,11 @@ def test_fuzzy_dedup_partitioning_invariant(spark):
     assert len(keepers) == len({t[1] for t in a})
 
 
-def test_star_cc_equals_minlabel_on_random_graphs(spark):
-    """large-star/small-star (the giant-component escalation) must produce
-    the IDENTICAL label map as min-label propagation — seeded pseudo-random
-    graphs with mixed component shapes, plus a long path and a bridge."""
+def test_cc_star_equals_driver_on_random_graphs(spark):
+    """The distributed large-star/small-star path must produce the IDENTICAL
+    label map as the driver union-find — seeded pseudo-random graphs with
+    mixed component shapes, plus a long path and a bridge."""
     import random
-
-    from safe_zone_spark.operators.dedup import connected_components_star
 
     cases = []
     for seed in (11, 12, 13):
@@ -111,28 +115,61 @@ def test_star_cc_equals_minlabel_on_random_graphs(spark):
     for edges in cases:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         a = {r["u"]: r["label"] for r in connected_components(df).collect()}
-        b = {r["u"]: r["label"] for r in connected_components_star(df).collect()}
+        b = {
+            r["u"]: r["label"]
+            for r in connected_components(df, driver_threshold=0).collect()
+        }
         assert a == b, f"divergence on {edges[:5]}..."
 
 
+def test_cc_deep_path_converges_at_defaults(spark):
+    """Shallow clique families plus one 41-node path (ids shuffled along
+    it): the distributed path resolves it at default settings in O(log d)
+    rounds and matches the driver labels. Min-label propagation needed one
+    round per hop and raised at its default cap of 25."""
+    import random
+
+    edges = []
+    for f in range(20):
+        fam = range(1000 + 10 * f, 1006 + 10 * f)
+        edges += [(a, b) for a in fam for b in fam if a < b]
+    path = list(range(41))
+    random.Random(7).shuffle(path)
+    edges += list(zip(path, path[1:]))
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    fast = {r["u"]: r["label"] for r in connected_components(df).collect()}
+    stats: dict = {}
+    dist = {
+        r["u"]: r["label"]
+        for r in connected_components(
+            df, driver_threshold=0, stats=stats
+        ).collect()
+    }
+    assert dist == fast
+    assert {fast[i] for i in range(41)} == {0}
+    assert stats["path"] == "star" and stats["rounds"] <= 12
+
+
 def test_fuzzy_dedup_star_and_precontract_match_default(spark):
-    """Both the 'star' CC loop and exact-dup pre-contraction must leave the
-    end-to-end cluster output unchanged on a corpus of >=shingle_n-word
-    docs with verbatim replicas (the boilerplate shape pre-contraction
-    exists to defuse)."""
+    """Both the distributed star CC loop (driver_threshold=0) and exact-dup
+    pre-contraction must leave the end-to-end cluster output unchanged on a
+    corpus of >=shingle_n-word docs with verbatim replicas (the boilerplate
+    shape pre-contraction exists to defuse)."""
     rows = [(i, f"shared boilerplate text body number {i % 3} end") for i in range(24)]
     rows += [(100 + i, f"wholly unique document number {i} talks about topic {i}")
              for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     base = sorted(tuple(r) for r in fuzzy_dedup_docs(df).collect())
-    star = sorted(tuple(r) for r in fuzzy_dedup_docs(df, algorithm="star").collect())
+    star = sorted(
+        tuple(r) for r in fuzzy_dedup_docs(df, driver_threshold=0).collect()
+    )
     contracted = sorted(
         tuple(r) for r in fuzzy_dedup_docs(df, pre_contract_exact=True).collect()
     )
     both = sorted(
         tuple(r)
         for r in fuzzy_dedup_docs(
-            df, algorithm="star", pre_contract_exact=True
+            df, driver_threshold=0, pre_contract_exact=True
         ).collect()
     )
     assert base == star == contracted == both
@@ -163,7 +200,7 @@ def test_cc_nonconvergence_raises(spark):
     edges = [(i, i + 1) for i in range(300, 330)]  # diameter 30
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=3, driver_threshold=0)
+        connected_components(df, max_iter=1, driver_threshold=0)
     # the driver fast path has no iteration cap — same input resolves fine
     labels = {r["u"]: r["label"] for r in connected_components(df).collect()}
     assert set(labels.values()) == {300}
@@ -173,8 +210,6 @@ def test_cc_string_ids_both_paths(spark):
     """id_col is a public parameter — string ids (urls, hash-hex) must work
     on the driver fast path AND the distributed loop (the old convergence
     check summed ids and only worked for numerics)."""
-    from safe_zone_spark.operators.dedup import connected_components_star
-
     edges = [("urlB", "urlC"), ("urlA", "urlB"), ("x", "y")]
     df = spark.createDataFrame(edges, "id_a string, id_b string")
     want = {"urlA": "urlA", "urlB": "urlA", "urlC": "urlA", "x": "x", "y": "x"}
@@ -183,8 +218,7 @@ def test_cc_string_ids_both_paths(spark):
         r["u"]: r["label"]
         for r in connected_components(df, driver_threshold=0).collect()
     }
-    star = {r["u"]: r["label"] for r in connected_components_star(df).collect()}
-    assert fast == dist == star == want
+    assert fast == dist == want
 
 
 def test_precontract_null_text_stays_singleton(spark):
