@@ -10,12 +10,15 @@ perplexity = exp(-mean log P(b_i | b_{i-2} b_{i-1})) over the byte stream,
 where P backs off to 1/(n(ctx)+256) for an unseen byte in a seen context
 and to 1/256 for an unseen context (the add-one row mass, exactly).
 
-The model is SPARSE — only observed trigrams and contexts are stored (a
-dense 256^3 table would be 16.7M rows for no benefit) — and scoring is
-fully vectorized: the document's UTF-8 bytes become packed int64 trigram
-keys, matched against the sorted key arrays with np.searchsorted, misses
-fall through to the context table then the constant. No per-character
-Python. A real KenLM export maps onto the same (key, logp) tables.
+The model is stored SPARSE — only observed trigrams and contexts (a dense
+256^3 table would be 16.7M rows for no benefit) — and scored through a
+direct-address table built once per model: the 16-bit context key picks a
+256-entry row (the context's backoff log-prob, overwritten by each
+observed trigram's log-prob; one extra row holds the unseen-context
+constant), so a lookup is two gathers with no search and no hit/miss
+masks. Scoring is fully vectorized: the document's UTF-8 bytes become
+packed int64 trigram keys. No per-character Python. A real KenLM export
+maps onto the same (key, logp) tables.
 """
 
 from __future__ import annotations
@@ -28,14 +31,28 @@ from pyspark.sql import functions as F
 
 
 class TrigramLM(NamedTuple):
-    """Sparse backoff LM: sorted packed keys + log-probs.
-    tri key = p2·65536 + p1·256 + c; ctx key = p2·256 + p1."""
+    """Sparse backoff LM: sorted packed keys + log-probs, plus the
+    direct-address lookup table derived from them (``make_lm`` builds it
+    once per model; never construct this tuple by hand).
+    tri key = p2·65536 + p1·256 + c; ctx key = p2·256 + p1.
+
+    ``table`` is a flattened (rows + 1) × 256 float64 array: one row per
+    context with a backoff value or an observed trigram, holding the
+    context's ``ctx_logp`` with its observed trigrams' ``tri_logp`` written
+    over it, then a last row of ``default_logp``. ``ctx_row[ctx key]`` is
+    the row's offset (row · 256; unseen contexts point at the last row), so
+    ``table[ctx_row[k >> 8] | (k & 255)]`` is trigram hit → context backoff
+    → default in two gathers. Footprint: 2 KiB per context row plus the
+    512 KiB ``ctx_row`` — 0.9 MB for the embedded 206-context model, and
+    128 MiB for a model observing all 65,536 contexts."""
 
     tri_keys: np.ndarray   # int64, sorted
     tri_logp: np.ndarray   # float64, log((n3+1)/(n2+256))
     ctx_keys: np.ndarray   # int64, sorted
     ctx_logp: np.ndarray   # float64, log(1/(n2+256)) — unseen byte in ctx
     default_logp: float    # log(1/256) — unseen context
+    ctx_row: np.ndarray    # int64[65536], row offset per context key
+    table: np.ndarray      # float64[(rows + 1) * 256], flattened
 
 
 DEFAULT_LOGP = float(np.log(1.0 / 256.0))
@@ -49,6 +66,30 @@ DEGENERATE_PPL = float(np.exp(-DEFAULT_LOGP))
 # truth — entry() and bench.py both import it; recalibrate HERE when the
 # LM changes scale.
 DEFAULT_PPL_MAX = 60.0
+
+
+def make_lm(tri_keys: np.ndarray, tri_logp: np.ndarray, ctx_keys: np.ndarray,
+            ctx_logp: np.ndarray) -> TrigramLM:
+    """The one TrigramLM constructor: keeps the sparse arrays and builds the
+    direct-address table from them. Keys outside the byte domain can never
+    be probed and are left out of the table; for a duplicated key the first
+    occurrence wins."""
+    tk_ok = (tri_keys >= 0) & (tri_keys < 1 << 24)
+    ck_ok = (ctx_keys >= 0) & (ctx_keys < 1 << 16)
+    _, t_first = np.unique(tri_keys[tk_ok], return_index=True)
+    _, c_first = np.unique(ctx_keys[ck_ok], return_index=True)
+    tk, tl = tri_keys[tk_ok][t_first], tri_logp[tk_ok][t_first]
+    ck, cl = ctx_keys[ck_ok][c_first], ctx_logp[ck_ok][c_first]
+    rows = np.union1d(ck, tk >> 8)
+    ctx_row = np.full(1 << 16, len(rows) * 256, dtype=np.int64)
+    ctx_row[rows] = np.arange(len(rows), dtype=np.int64) * 256
+    table = np.full((len(rows) + 1, 256), DEFAULT_LOGP, dtype=np.float64)
+    table[ctx_row[ck] >> 8] = cl[:, None]
+    table = table.reshape(-1)
+    table[ctx_row[tk >> 8] | (tk & 255)] = tl
+    return TrigramLM(tri_keys=tri_keys, tri_logp=tri_logp, ctx_keys=ctx_keys,
+                     ctx_logp=ctx_logp, default_logp=DEFAULT_LOGP,
+                     ctx_row=ctx_row, table=table)
 
 
 def train_trigram_lm(texts) -> TrigramLM:
@@ -68,13 +109,8 @@ def train_trigram_lm(texts) -> TrigramLM:
     # are observed by construction → exact match guaranteed)
     ctx_of_tri = np.searchsorted(ctx_keys, tri_keys >> 8)
     denom = n2[ctx_of_tri] + 256.0
-    return TrigramLM(
-        tri_keys=tri_keys,
-        tri_logp=np.log((n3 + 1.0) / denom),
-        ctx_keys=ctx_keys,
-        ctx_logp=np.log(1.0 / (n2 + 256.0)),
-        default_logp=DEFAULT_LOGP,
-    )
+    return make_lm(tri_keys, np.log((n3 + 1.0) / denom),
+                   ctx_keys, np.log(1.0 / (n2 + 256.0)))
 
 
 def _seed_corpus() -> list[str]:
@@ -93,21 +129,9 @@ def _seed_corpus() -> list[str]:
 
 def _lookup_logps(k3: np.ndarray, lm: TrigramLM) -> np.ndarray:
     """Vectorized log-prob lookup for a stream of trigram keys (any number
-    of docs' keys concatenated — the lookup is positionwise)."""
-    lp = np.full(len(k3), lm.default_logp, dtype=np.float64)
-    if len(lm.tri_keys):
-        pos = np.searchsorted(lm.tri_keys, k3)
-        pos_c = np.minimum(pos, len(lm.tri_keys) - 1)
-        hit = lm.tri_keys[pos_c] == k3
-        lp[hit] = lm.tri_logp[pos_c[hit]]
-        miss = np.nonzero(~hit)[0]
-        if len(miss) and len(lm.ctx_keys):
-            k2 = k3[miss] >> 8
-            pos2 = np.searchsorted(lm.ctx_keys, k2)
-            pos2_c = np.minimum(pos2, len(lm.ctx_keys) - 1)
-            hit2 = lm.ctx_keys[pos2_c] == k2
-            lp[miss[hit2]] = lm.ctx_logp[pos2_c[hit2]]
-    return lp
+    of docs' keys concatenated — the lookup is positionwise): two gathers
+    through the model's direct-address table."""
+    return lm.table[lm.ctx_row[k3 >> 8] | (k3 & 255)]
 
 
 def _doc_logps(b: np.ndarray, lm: TrigramLM) -> np.ndarray:
@@ -119,14 +143,15 @@ def _doc_logps(b: np.ndarray, lm: TrigramLM) -> np.ndarray:
 
 def perplexity_batch(texts, lm: TrigramLM | None = None) -> np.ndarray:
     """Whole-batch scoring: every doc's trigram keys are concatenated (with
-    the 2 boundary-straddling windows per doc masked out) so the sorted-key
-    binary search runs ONCE per batch instead of once per ~200-byte doc —
+    the 2 boundary-straddling windows per doc masked out) so the table
+    lookup runs ONCE per chunk of docs instead of once per ~200-byte doc —
     the per-doc form spent ~45 µs/doc in numpy dispatch, 6x the arithmetic.
     Bit-identical to the per-doc form: lookups are positionwise and each
-    doc's mean is still ``np.mean`` (pairwise summation) over exactly its
-    own slice of the lp stream. Docs are processed in ~128 KiB chunks
-    (langid._CHUNK_BYTES rationale: whole-Arrow-batch passes made every
-    temporary DRAM-sized and 32 concurrent workers saturated memory
+    doc's mean is ``np.add.reduce`` (the pairwise summation ``np.mean``
+    runs, without its wrapper overhead) over exactly its own slice of the
+    lp stream, divided by the slice length. Docs are processed in ~128 KiB
+    chunks (langid._CHUNK_BYTES rationale: whole-Arrow-batch passes made
+    every temporary DRAM-sized and 32 concurrent workers saturated memory
     bandwidth; chunked, temporaries stay L2-resident)."""
     from .text_analysis import _CHUNK_BYTES, _chunk_bounds, _window3_keep
 
@@ -150,9 +175,10 @@ def perplexity_batch(texts, lm: TrigramLM | None = None) -> np.ndarray:
         )
         bounds = np.zeros(hi - lo + 1, dtype=np.int64)
         np.cumsum(lens[lo:hi] - 2, out=bounds[1:])
+        b = bounds.tolist()
         for j in range(hi - lo):
             out[pos[lo + j]] = float(
-                np.exp(-lp[bounds[j]:bounds[j + 1]].mean())
+                np.exp(-(np.add.reduce(lp[b[j]:b[j + 1]]) / (b[j + 1] - b[j])))
             )
     return out
 
@@ -209,8 +235,8 @@ def write_trigram_parquet(tri_path: str, ctx_path: str,
 
 
 def _sorted_kv(t) -> tuple[np.ndarray, np.ndarray]:
-    """(key, logp) arrow table → aligned arrays re-sorted by key (stable)
-    so searchsorted scoring is valid regardless of the table's row order."""
+    """(key, logp) arrow table → aligned arrays re-sorted by key (stable),
+    so a loaded model's arrays are ordered as a trained one's."""
     k = np.asarray(t.column("key").to_pylist(), dtype=np.int64)
     lp = np.asarray(t.column("logp").to_pylist(), dtype=np.float64)
     order = np.argsort(k, kind="stable")
@@ -224,8 +250,7 @@ def load_trigram_parquet(tri_path: str, ctx_path: str) -> TrigramLM:
 
     tk, tl = _sorted_kv(pq.read_table(tri_path))
     ck, cl = _sorted_kv(pq.read_table(ctx_path))
-    return TrigramLM(tri_keys=tk, tri_logp=tl, ctx_keys=ck, ctx_logp=cl,
-                     default_logp=DEFAULT_LOGP)
+    return make_lm(tk, tl, ck, cl)
 
 
 # --- import-time model bootstrap: load the persisted sparse tables, train
@@ -263,8 +288,7 @@ def _load_embedded_lm() -> TrigramLM | None:
     try:
         tk, tl = _sorted_kv(tabs[0])
         ck, cl = _sorted_kv(tabs[1])
-        return TrigramLM(tri_keys=tk, tri_logp=tl, ctx_keys=ck, ctx_logp=cl,
-                         default_logp=DEFAULT_LOGP)
+        return make_lm(tk, tl, ck, cl)
     except Exception:
         return None
 

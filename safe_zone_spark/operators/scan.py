@@ -130,13 +130,37 @@ def _blob_safe(src: str) -> bool:
     return True
 
 
+def _join_docs(parts: list[bytes]) -> tuple[bytes, np.ndarray]:
+    """NUL-join documents into one blob; doc i occupies
+    ``blob[starts[i] : starts[i] + len(parts[i])]``."""
+    n = len(parts)
+    lengths = np.fromiter(map(len, parts), dtype=np.int64, count=n)
+    starts = np.zeros(n, dtype=np.int64)
+    if n > 1:
+        np.cumsum(lengths[:-1] + 1, out=starts[1:])
+    return _SEP.join(parts), starts
+
+
+def _batch_blob(texts) -> tuple[list[bytes], bytes, np.ndarray]:
+    """A batch's UTF-8 encodings (None → "") and their NUL-joined blob."""
+    encoded = [("" if t is None else t).encode("utf-8") for t in texts]
+    return (encoded, *_join_docs(encoded))
+
+
 def _append_matches(
-    per_doc, matches, starts, blob, p, score, placeholder, allow
+    per_doc, compiled, blob, starts, doc_ids, p, score, placeholder, allow
 ) -> None:
+    """One finditer over a (sub-)blob; each match is routed to its document
+    by a vectorized searchsorted over ``starts`` (``doc_ids`` maps a
+    sub-blob's local doc index back to the batch; None for the batch blob)."""
+    matches = [(m.start(), m.end()) for m in compiled.finditer(blob)]
+    if not matches:
+        return
     m_starts = np.fromiter((s for s, _ in matches), dtype=np.int64, count=len(matches))
-    doc_idx = np.searchsorted(starts, m_starts, side="right") - 1
-    for (s, e), di in zip(matches, doc_idx):
-        base = int(starts[di])
+    local = np.searchsorted(starts, m_starts, side="right") - 1
+    bases = starts[local].tolist()
+    dis = (local if doc_ids is None else doc_ids[local]).tolist()
+    for (s, e), di, base in zip(matches, dis, bases):
         value = blob[s:e].decode("utf-8", "surrogateescape")
         if value in allow:
             continue
@@ -144,29 +168,46 @@ def _append_matches(
 
 
 # ---------------------------------------------------------------------------
-# Necessary-condition gates: a pattern keyed here (by EXACT regex source, so
-# custom rules never inherit a wrong gate) can only match text that either
-# contains an ASCII digit ("digit") or contains one of the listed lowercase
-# literals. Gates shrink the scan domain — they can never add or drop a
-# match (pinned by the oracle-parity and property tests).
+# Necessary-condition gates, keyed by EXACT regex source (so custom rules
+# never inherit a wrong gate). A gated pattern scans one NUL-joined
+# sub-blob of only the docs that pass its gate; sub-blobs are cached per
+# gate, so patterns sharing a gate share one. Gates shrink the scan domain
+# — they can never add or drop a match (pinned by the oracle-parity and
+# property tests). Every gated source is blob-safe.
+#
+# * byte gates: the doc must contain a byte of the set. One
+#   ``blob.translate`` maps each byte to a bitmask of the byte sets it
+#   belongs to, and one ``np.bitwise_or.reduceat`` turns that into per-doc
+#   flags, for all byte gates at once.
+# * literal gates: the lowercased doc must contain one of the literals.
+# * run gates: the doc must contain a run of N bytes from a class.
 # ---------------------------------------------------------------------------
 
-_DIGIT_GATED = frozenset({
-    r"\b[1-9][0-9]{9}[02468]\b",                                   # TCKN
-    r"\b(?:(?:\+?90)|0)?5\d{2}(?:\s*|-)\d{3}(?:\s*|-)\d{2}(?:\s*|-)\d{2}\b",  # PHONE_TR
-    r"\b\+(?:[0-9] ?){6,14}[0-9]\b",                               # PHONE_INT
-    r"\b(?:\d[ -]*?){13,16}\b",                                    # CREDIT_CARD
-    r"\bTR\d{2}\s?(\d{4}\s?){5}\d{2}\b",                           # IBAN_TR
-    r"\b\d{2}[./-]\d{2}[./-]\d{4}\b",                              # DATE
-    r"\b(0[1-9]|[1-7][0-9]|8[01])\s?[A-Z]{1,3}\s?\d{2,4}\b",       # TURKISH_PLATE
-    r"\b\d{10}\b",                                                  # VKN
-    r"\b\d{16}\b",                                                  # MERSIS
-    r"\b\d{3}-\d{2}-\d{4}\b",                                       # US_SSN
-    r"\b[A-CEGHJ-PR-TW-Z]{1}[A-CEGHJ-NPR-TW-Z]{1}[0-9]{6}[A-D]{1}\b",  # UK_NINO
-})
+_DIGITS = b"0123456789"
+_BYTE_GATES: dict[str, bytes] = {
+    r"\b[1-9][0-9]{9}[02468]\b": _DIGITS,                                   # TCKN
+    r"\b(?:(?:\+?90)|0)?5\d{2}(?:\s*|-)\d{3}(?:\s*|-)\d{2}(?:\s*|-)\d{2}\b": _DIGITS,  # PHONE_TR
+    r"\b\+(?:[0-9] ?){6,14}[0-9]\b": _DIGITS,                               # PHONE_INT
+    r"\b(?:\d[ -]*?){13,16}\b": _DIGITS,                                    # CREDIT_CARD
+    r"\bTR\d{2}\s?(\d{4}\s?){5}\d{2}\b": _DIGITS,                           # IBAN_TR
+    r"\b\d{2}[./-]\d{2}[./-]\d{4}\b": _DIGITS,                              # DATE
+    r"\b(0[1-9]|[1-7][0-9]|8[01])\s?[A-Z]{1,3}\s?\d{2,4}\b": _DIGITS,       # TURKISH_PLATE
+    r"\b\d{10}\b": _DIGITS,                                                  # VKN
+    r"\b\d{16}\b": _DIGITS,                                                  # MERSIS
+    r"\b\d{3}-\d{2}-\d{4}\b": _DIGITS,                                       # US_SSN
+    r"\b[A-CEGHJ-PR-TW-Z]{1}[A-CEGHJ-NPR-TW-Z]{1}[0-9]{6}[A-D]{1}\b": _DIGITS,  # UK_NINO
+    r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}": b"@",                      # EMAIL
+    # UUID_PII: four hyphens
+    r"\b[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\b": b"-",
+    r"\b([0-9A-Fa-f]{2}[:-]){5}([0-9A-Fa-f]{2})\b": b":-",                   # MAC_ADDRESS
+}
+_GATE_BITS = {bs: 1 << i for i, bs in enumerate(dict.fromkeys(_BYTE_GATES.values()))}
+assert len(_GATE_BITS) <= 8  # one uint8 flag per byte
+_FLAG_TABLE = bytes(
+    sum(bit for bs, bit in _GATE_BITS.items() if c in bs) for c in range(256)
+)
 
 _LITERAL_GATES = {
-    r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}": (b"@",),               # EMAIL
     r"\bAKIA[0-9A-Z]{16}\b": (b"akia",),                                  # AWS_ACCESS_KEY
     r"-----BEGIN (?:RSA|DSA|EC|PGP) PRIVATE KEY-----": (b"-----begin ",),
     r"\b(api_key|apikey|access_token|auth_token)\s*[:=]\s*[A-Za-z0-9-_]{16,64}\b":
@@ -175,13 +216,20 @@ _LITERAL_GATES = {
         (b"ignore previous instructions", b"forget all prior instructions"),
     r"(?i)(DAN mode|do anything now)": (b"dan mode", b"do anything now"),
 }
-# NB: UUID_PII / MAC_ADDRESS / AWS_SECRET_KEY have NO valid digit gate —
-# their hex/base62 classes can match letters-only values — so they scan the
-# full blob ungated.
+
+_B62_SLASH_PLUS = bytes(range(48, 58)) + bytes(range(65, 91)) + bytes(range(97, 123)) + b"/+"
+_RUN_GATES = {
+    # AWS_SECRET_KEY: a run of 40 class bytes. The blob is translated to a
+    # two-symbol alphabet (class byte → "a", any other → " ").
+    r"\b[0-9a-zA-Z/+]{40}\b": (
+        bytes(97 if c in _B62_SLASH_PLUS else 32 for c in range(256)), b"a" * 40,
+    ),
+}
 
 
-def _candidate_docs(lblob: bytes, starts: np.ndarray, literals) -> set[int]:
-    """Docs containing any of the lowercase literals (memchr-speed finds)."""
+def _candidate_docs(lblob: bytes, starts: np.ndarray, literals) -> np.ndarray:
+    """Sorted docs containing any of the lowercase literals (memchr-speed
+    finds)."""
     out: set[int] = set()
     for lit in literals:
         pos = 0
@@ -191,107 +239,78 @@ def _candidate_docs(lblob: bytes, starts: np.ndarray, literals) -> set[int]:
                 break
             out.add(int(np.searchsorted(starts, idx, side="right") - 1))
             pos = idx + 1
-    return out
+    return np.array(sorted(out), dtype=np.int64)
+
+
+def _run_docs(blob: bytes, starts: np.ndarray, table: bytes, needle: bytes) -> np.ndarray:
+    """Sorted docs holding ``needle`` in the blob translated by ``table``;
+    each hit jumps the search to the next doc's start."""
+    runs = blob.translate(table)
+    out: list[int] = []
+    pos = runs.find(needle)
+    while pos != -1:
+        di = int(np.searchsorted(starts, pos, side="right") - 1)
+        out.append(di)
+        if di + 1 == len(starts):
+            break
+        pos = runs.find(needle, int(starts[di + 1]))
+    return np.array(out, dtype=np.int64)
 
 
 def _scan_blob_patterns(
     blob: bytes,
     starts: np.ndarray,
-    n_docs: int,
+    encoded: list[bytes],
     rules: RuleSet,
     placeholder_style: str,
-    encoded: list[bytes] | None = None,
 ) -> list[list[Detection]]:
     """One finditer pass per blob-safe pattern over the whole batch blob
     (matches routed back to documents via vectorized searchsorted); patterns
     that could anchor to or cross the NUL separators (``_blob_safe`` false)
     scan per document instead — same results, just without the batch win.
 
-    Gated patterns scan a reduced domain: digit-gated patterns run over a
-    sub-blob of only digit-containing documents (~20-30% of clean web text);
-    literal-gated patterns run per-doc over only the docs containing a
-    necessary literal. Measured ~4x on the synthetic corpus, bit-identical
-    results.
+    Gated patterns (the byte, literal and run gates above) run one finditer
+    over the sub-blob of only the docs that pass their gate: ~23% of the
+    blob for the digit patterns, 6-11% for EMAIL / UUID_PII / MAC_ADDRESS
+    on the synthetic corpus. Bit-identical results.
     """
-    per_doc: list[list[Detection]] = [[] for _ in range(n_docs)]
+    n = len(encoded)
+    per_doc: list[list[Detection]] = [[] for _ in range(n)]
     allow = rules.allowlist
+    doc_flags = lblob = None
+    subs: dict[object, tuple[bytes, np.ndarray, np.ndarray]] = {}
 
-    compiled_patterns = compile_patterns(rules)
-    any_digit_gate = any(p.regex in _DIGIT_GATED for p, _ in compiled_patterns)
-    digit_blob = digit_starts = digit_docidx = None
-    if any_digit_gate:
-        # pad one byte so reduceat indices stay in range when the last doc
-        # is empty (starts[last] == len(blob))
-        arr = np.frombuffer(blob + b"\x00", dtype=np.uint8)
-        is_digit = (arr >= 48) & (arr <= 57)
-        seg_has = np.add.reduceat(is_digit, starts) > 0
-        digit_docidx = np.nonzero(seg_has)[0]
-        if encoded is not None:
-            parts = [encoded[int(i)] for i in digit_docidx]
-        else:
-            parts = [
-                blob[int(starts[i]): (int(starts[i + 1]) - 1 if i + 1 < n_docs else len(blob))]
-                for i in digit_docidx
-            ]
-        m = len(parts)
-        lengths = np.fromiter((len(b) for b in parts), dtype=np.int64, count=m)
-        digit_starts = np.zeros(m, dtype=np.int64)
-        if m > 1:
-            np.cumsum(lengths[:-1] + 1, out=digit_starts[1:])
-        digit_blob = _SEP.join(parts)
+    def sub_blob(key, find_docs):
+        sub = subs.get(key)
+        if sub is None:
+            docs = find_docs()
+            sub = subs[key] = (*_join_docs([encoded[i] for i in docs.tolist()]), docs)
+        return sub
 
-    lblob = None  # lazily lowercased once if any literal gate fires
-
-    for p, compiled in compiled_patterns:
+    for p, compiled in compile_patterns(rules):
         score = round_confidence(compute_confidence(category=p.category, active=p.is_active))
         placeholder = make_placeholder(p.name, style=placeholder_style)
-        if p.regex in _DIGIT_GATED and digit_blob is not None:
-            if len(digit_blob):
-                matches = [(m_.start(), m_.end()) for m_ in compiled.finditer(digit_blob)]
-                for (s, e) in matches:
-                    di_local = int(np.searchsorted(digit_starts, s, side="right") - 1)
-                    di = int(digit_docidx[di_local])
-                    base = int(digit_starts[di_local])
-                    value = digit_blob[s:e].decode("utf-8", "surrogateescape")
-                    if value in allow:
-                        continue
-                    per_doc[di].append(
-                        Detection(p.name, value, placeholder, s - base, e - base, score)
-                    )
-            continue
-        gate_lits = _LITERAL_GATES.get(p.regex)
-        if gate_lits is not None:
+        src = p.regex
+        if src in _BYTE_GATES:
+            if doc_flags is None:
+                # pad one byte so reduceat stays in range when the last doc
+                # is empty (starts[last] == len(blob))
+                flags = np.frombuffer(blob.translate(_FLAG_TABLE) + _SEP, dtype=np.uint8)
+                doc_flags = np.bitwise_or.reduceat(flags, starts)
+            bit = _GATE_BITS[_BYTE_GATES[src]]
+            target = sub_blob(bit, lambda: np.flatnonzero(doc_flags & bit))
+        elif src in _LITERAL_GATES:
             if lblob is None:
                 lblob = blob.lower()
-            cands = _candidate_docs(lblob, starts, gate_lits)
-            for i in sorted(cands):
-                data = (
-                    encoded[i]
-                    if encoded is not None
-                    else blob[int(starts[i]): (int(starts[i + 1]) - 1 if i + 1 < n_docs
-                                               else len(blob))]
-                )
-                for m_ in compiled.finditer(data):
-                    value = data[m_.start(): m_.end()].decode("utf-8", "surrogateescape")
-                    if value in allow:
-                        continue
-                    per_doc[i].append(
-                        Detection(p.name, value, placeholder, m_.start(), m_.end(), score)
-                    )
-            continue
-        if _blob_safe(p.regex):
-            matches = [(m.start(), m.end()) for m in compiled.finditer(blob)]
-            if matches:
-                _append_matches(per_doc, matches, starts, blob, p, score, placeholder, allow)
+            lits = _LITERAL_GATES[src]
+            target = sub_blob(lits, lambda: _candidate_docs(lblob, starts, lits))
+        elif src in _RUN_GATES:
+            table, needle = _RUN_GATES[src]
+            target = sub_blob(src, lambda: _run_docs(blob, starts, table, needle))
+        elif _blob_safe(src):
+            target = (blob, starts, None)
         else:
-            docs = encoded if encoded is not None else [
-                blob[int(starts[i]): int(starts[i]) + (
-                    (int(starts[i + 1]) - 1 - int(starts[i])) if i + 1 < n_docs
-                    else len(blob) - int(starts[i])
-                )]
-                for i in range(n_docs)
-            ]
-            for i, data in enumerate(docs):
+            for i, data in enumerate(encoded):
                 for m in compiled.finditer(data):
                     value = data[m.start(): m.end()].decode("utf-8", "surrogateescape")
                     if value in allow:
@@ -299,6 +318,8 @@ def _scan_blob_patterns(
                     per_doc[i].append(
                         Detection(p.name, value, placeholder, m.start(), m.end(), score)
                     )
+            continue
+        _append_matches(per_doc, compiled, *target, p, score, placeholder, allow)
     return per_doc
 
 
@@ -346,19 +367,11 @@ def detect_batch(
     # one materialization up front — per-row Series.iloc in the doc loop
     # costs ~15us each (measured 0.2s per 13k rows)
     texts = texts.tolist() if hasattr(texts, "tolist") else list(texts)
-    encoded = [("" if t is None else t).encode("utf-8") for t in texts]
+    encoded, blob, starts = _batch_blob(texts)
     n = len(encoded)
-    lengths = np.fromiter((len(b) for b in encoded), dtype=np.int64, count=n)
-    # doc i occupies blob[starts[i] : starts[i] + lengths[i]]
-    starts = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(lengths[:-1] + 1, out=starts[1:])
-    blob = _SEP.join(encoded)
 
     block_per_doc = _scan_blob_blocklist(blob, starts, n, rules)
-    pat_per_doc = _scan_blob_patterns(
-        blob, starts, n, rules, placeholder_style, encoded=encoded
-    )
+    pat_per_doc = _scan_blob_patterns(blob, starts, encoded, rules, placeholder_style)
 
     # shared per-doc validator results (same names for every doc in the job)
     out = {
@@ -375,15 +388,23 @@ def detect_batch(
 
     allow_t, block_t = rules.allow_threshold, rules.block_threshold
     for i in range(n):
-        data = encoded[i]
-        blocked = False
-        messages: list[str] = []
-        validator_results: list[tuple[bool, float]] = []
         row_names = set(validator_names)
         if expected_formats is not None:
             fmt = expected_formats[i]
             if fmt:
                 row_names.add(fmt)
+        candidates = block_per_doc[i] + pat_per_doc[i]
+        if not candidates and not row_names:
+            # the constant clean row: kept, text unchanged, confidence 0.0
+            out["detections"].append([])
+            out["breakdown"].append({})
+            out["keep"][i] = True
+            out["scrubbed_text"].append(texts[i] or "")
+            out["message"].append("")
+            continue
+        blocked = False
+        messages: list[str] = []
+        validator_results: list[tuple[bool, float]] = []
         if row_names:
             text = texts[i]
             for vname in sorted(row_names):
@@ -400,7 +421,7 @@ def detect_batch(
                     conf = 0.7
                 validator_results.append((valid and err is None, round_confidence(conf)))
 
-        detections = resolve_overlaps(block_per_doc[i] + pat_per_doc[i])
+        detections = resolve_overlaps(candidates)
 
         breakdown: dict[str, int] = {}
         rows = []
@@ -439,7 +460,7 @@ def detect_batch(
             overall /= weight
 
         scrubbed = (
-            scrub_text(data, detections).decode("utf-8", "surrogateescape")
+            scrub_text(encoded[i], detections).decode("utf-8", "surrogateescape")
             if contains
             else texts[i] or ""
         )
@@ -576,15 +597,9 @@ def pattern_hit_counts(df, rules: RuleSet | None = None, *, id_col: str = "doc_i
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         r = b_rules.value
         for pdf in batches:
-            texts = pdf[text_col]
-            encoded = [("" if t is None else t).encode("utf-8") for t in texts]
+            encoded, blob, starts = _batch_blob(pdf[text_col])
             n = len(encoded)
-            lengths = np.fromiter((len(b) for b in encoded), dtype=np.int64, count=n)
-            starts = np.zeros(n, dtype=np.int64)
-            if n > 1:
-                np.cumsum(lengths[:-1] + 1, out=starts[1:])
-            blob = _SEP.join(encoded)
-            per_doc = _scan_blob_patterns(blob, starts, n, r, "type", encoded=encoded)
+            per_doc = _scan_blob_patterns(blob, starts, encoded, r, "type")
             ids, types, hits = [], [], []
             id_values = pdf[id_col].tolist()
             for i in range(n):

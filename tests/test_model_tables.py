@@ -169,7 +169,7 @@ def test_ood_trigram_lm_import_engine_matches_oracle(tmp_path):
 
 def test_batched_scoring_is_bit_identical_to_per_doc_forms():
     """The batched scorers (langid._batch_trigram_scores gather/reduceat,
-    perplexity_batch's one-searchsorted-per-batch) replaced per-doc numpy
+    perplexity_batch's one-table-lookup-per-chunk) replaced per-doc numpy
     loops for throughput (~3x on the ~200-byte bench corpus). The rewrite
     is only legal because it is BIT-identical: int64 sums are
     order-exact, the masked concatenated trigram stream equals the
@@ -247,3 +247,75 @@ def test_batched_scoring_is_bit_identical_to_per_doc_forms():
         s = _WEIGHTS[:, u] @ c
         ref_q.append((int(s[ih]), int(s[il])))
     assert quality_scores(texts) == ref_q
+
+
+def _dict_logps(text: str, lm) -> list[float]:
+    """Pure-Python backoff reference: trigram hit → context → default."""
+    tri = dict(zip(lm.tri_keys.tolist(), lm.tri_logp.tolist()))
+    ctx = dict(zip(lm.ctx_keys.tolist(), lm.ctx_logp.tolist()))
+    b = text.encode("utf-8")
+    out = []
+    for i in range(len(b) - 2):
+        k = (b[i] << 16) | (b[i + 1] << 8) | b[i + 2]
+        out.append(tri[k] if k in tri else ctx.get(k >> 8, lm.default_logp))
+    return out
+
+
+def test_perplexity_lookup_tiers_match_dict_reference():
+    """The direct-address table returns, per trigram, exactly the float a
+    dict lookup through the three backoff tiers returns — on a custom LM
+    over multi-byte UTF-8 (bytes >= 0x80), with every tier exercised."""
+    from safe_zone_spark.functions.perplexity import _lookup_logps
+
+    lm = train_trigram_lm(["çok güzel bir gün", "öğle yemeği şimdi", "日本語"])
+    docs = ["güzel gün şimdi", "日本語のテキスト", "zzz qqq", "çö", "ab",
+            "öğle güzel 日本"]
+    tri, ctx = set(lm.tri_keys.tolist()), set(lm.ctx_keys.tolist())
+    tiers = set()
+    for d in docs:
+        b = d.encode()
+        for i in range(len(b) - 2):
+            k = (b[i] << 16) | (b[i + 1] << 8) | b[i + 2]
+            tiers.add("tri" if k in tri else "ctx" if k >> 8 in ctx else "default")
+    assert tiers == {"tri", "ctx", "default"}
+    assert any(c >= 0x80 for d in docs for c in d.encode())
+
+    got = perplexity_batch(docs, lm)
+    for i, d in enumerate(docs):
+        ref = _dict_logps(d, lm)
+        b = np.frombuffer(d.encode(), dtype=np.uint8).astype(np.int64)
+        if not ref:
+            assert got[i] == DEGENERATE_PPL
+            continue
+        k3 = (b[:-2] << 16) | (b[1:-1] << 8) | b[2:]
+        assert _lookup_logps(k3, lm).tolist() == ref, d
+        assert got[i] == float(np.exp(-np.mean(np.array(ref)))), d
+
+
+def test_perplexity_models_keep_their_own_tables():
+    """Two custom LMs scored in alternation in one process: each call must
+    read its own model's table, never one built for the other."""
+    lm_a = train_trigram_lm(["alpha beta gamma delta", "beta gamma alpha"])
+    lm_b = train_trigram_lm(["şu çiçek güzel", "güzel çiçek şu an"])
+    docs = ["alpha gamma", "güzel çiçek", "beta şu"]
+    want = {
+        name: [float(np.exp(-np.mean(np.array(_dict_logps(d, lm))))) for d in docs]
+        for name, lm in (("a", lm_a), ("b", lm_b))
+    }
+    assert want["a"] != want["b"]
+    for name, lm in (("a", lm_a), ("b", lm_b), ("a", lm_a), ("b", lm_b)):
+        assert perplexity_batch(docs, lm).tolist() == want[name], name
+
+
+def test_make_lm_skips_unprobeable_keys_and_keeps_first_duplicate():
+    """A foreign (key, logp) table may carry keys outside the byte domain or
+    repeat a key: the former can never be probed, and for the latter the
+    first occurrence wins, as the first match of a sorted-key search did."""
+    from safe_zone_spark.functions.perplexity import DEFAULT_LOGP, _lookup_logps, make_lm
+
+    lm = make_lm(np.array([-1, 0x616263, 0x616263, 1 << 24], dtype=np.int64),
+                 np.array([-9.0, -1.0, -2.0, -9.0]),
+                 np.array([0x6162, 1 << 16], dtype=np.int64),
+                 np.array([-3.0, -9.0]))
+    k3 = np.array([0x616263, 0x616264, 0x7A7A7A, 0xFFFFFF], dtype=np.int64)
+    assert _lookup_logps(k3, lm).tolist() == [-1.0, -3.0, DEFAULT_LOGP, DEFAULT_LOGP]

@@ -47,6 +47,10 @@ PII_FRAGMENTS = [
     "a@b",  # near-miss email
     "+90 555 123 45 67",
     "AB123456C",
+    "123e4567-e89b-12d3-a456-426614174000",
+    "123e4567e89b-12d3-a456-426614174000",  # near-miss UUID: one hyphen short
+    "wJalrXUtnFEMI/K7MDENG/bPxRfiCYEXAMPLEKEY",  # 40-byte AWS secret
+    "wJalrXUtnFEMI/K7MDENG/bPxRfiCYEXAMPLEKE",  # near-miss: 39-byte run
 ]
 
 WORDS = ["the", "table", "büyük", "naïve", "data", "x", "@", ".", "-", "5", "中文"]
